@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import java.util.concurrent.atomic.AtomicLong
 
 object Bench {
@@ -12,44 +11,15 @@ object Bench {
   private def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Global task-metric accumulator. Queries run sequentially on the
-    * driver, so (after - before) snapshots around each query attribute
-    * executor task time and shuffle volume to that query. Task time is
-    * the load-robust signal: wall time on a contended box inflates with
-    * scheduling delay, but the sum of executor run time measures the work
-    * the plan actually did — a query whose wall is 12 s with 0.9 s of
-    * task time is waiting, not computing.
-    */
-  private final class Totals extends SparkListener {
-    val taskMs = new AtomicLong
-    val shRead = new AtomicLong
-    val shWrite = new AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
-        shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def snap(): (Long, Long, Long) = (taskMs.get, shRead.get, shWrite.get)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Conf.engineDefaults is currently EMPTY (the r14 cached-plan-AQE
-    // candidate was A/B'd and rejected — numbers in Conf.scala; the win
-    // ships as per-artifact sizing in ops.Parts instead). The wrapper
-    // stays so a future measured engine conf lands in ONE place.
-    val spark = Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
-    val totals = new Totals
+    // Queries run sequentially on the driver, so (after - before)
+    // snapshots around each query attribute executor task time and
+    // shuffle volume to that query: a query whose wall is 12 s with
+    // 0.9 s of task time is waiting, not computing.
+    val totals = new Session.TaskTotals
     spark.sparkContext.addSparkListener(totals)
     // Micro-batch trigger counter: the stream_* family's wall is
     // dominated by per-trigger machinery (scheduling + state-store
@@ -72,21 +42,36 @@ object Bench {
         override def onQueryTerminated(e: org.apache.spark.sql.streaming
             .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       })
+    // Warm-up and layer-build failures don't stop the bench (the query
+    // pass still measures everything that built), but each one is printed
+    // to stderr and recorded in BENCH_FULL.json's layer_failed array: a
+    // silently missing layer makes the query pass rebuild it and bills
+    // that to whichever query touches it first.
+    val layerFailed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    def record(phase: String, component: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $phase $component failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+      layerFailed.add(s"""{"phase":"$phase","component":""" +
+        Verify.quote(component) + ""","class":""" +
+        Verify.quote(e.getClass.getName) + ""","message":""" +
+        Verify.quote(String.valueOf(e.getMessage)) + "}")
+      ()
+    }
+    def guard(phase: String, component: String)(body: => Any): Unit =
+      try { body; () } catch { case e: Throwable => record(phase, component, e) }
     // JIT/codegen/parquet-reader warm-up so measured queries aren't charged
     // for one-time JVM startup costs: run every query once at the smallest
     // scale factor (sf0.001) to compile each plan's codegen paths, then
     // measure at the target scale. (First-run JIT was ~6 s of a 600k-row
     // join's 6.5 s — warm-up isolates the actual per-row cost.)
-    try {
-      spark.range(1L << 20).selectExpr("sum(id)").collect()
-      run(SparkEntry.entry(spark))
-      val warmDir = "/root/testdata/sf0.001"
-      if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-        SparkEntry.queries.foreach { case (_, fn) =>
-          try run(fn(spark, warmDir))
-          catch { case _: Throwable => }
-        }
-    } catch { case _: Throwable => }
+    guard("warmup", "jit")(spark.range(1L << 20).selectExpr("sum(id)").collect())
+    guard("warmup", "entry")(run(SparkEntry.entry(spark)))
+    val warmDir =
+      new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001").getPath
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
+      SparkEntry.queries.foreach { case (name, fn) =>
+        guard("warmup", name)(run(fn(spark, warmDir)))
+      }
     // The stage/DWH layers, the QA report, the bucketed join tables, the
     // ANN indexes, and every first-touch physical layout (partitioned /
     // z-order / compacted / sketch tables / corrupt feed / time-travel
@@ -99,10 +84,11 @@ object Bench {
     val tLayer = System.nanoTime()
     // per-component build seconds on stderr (diagnostic only — the JSON
     // stdout line must stay compact); concurrent components report their
-    // own span, so spans overlap and don't sum to the phase wall time
-    def timed[T](what: String)(body: => T): T = {
+    // own span, so spans overlap and don't sum to the phase wall time.
+    // A failed component is recorded and the others still build.
+    def timed(what: String)(body: => Any): Unit = {
       val t0 = System.nanoTime()
-      try body
+      try guard("layer_build", what)(body)
       finally System.err.println(
         f"[bench] build $what: ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
@@ -214,7 +200,7 @@ object Bench {
             graft.ops.Joins.entityResolve(spark, sfDir).count())))),
           Duration.Inf)
       } finally pool.shutdown()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => record("layer_build", "scheduler", e) }
     val layerSec = (System.nanoTime() - tLayer) / 1e9
     // Storage telemetry (stderr diagnostic, like the build timings): the
     // checkpoint-lifetime discipline (ops.Scratch) claims block-manager
@@ -244,6 +230,7 @@ object Bench {
     // state-store checkpoint latency — not data cost.
     val repCapSec = 4.0
     val results = SparkEntry.queries.map { case (name, fn) =>
+      totals.drainStages() // per-stage detail is ProfQuery's lens; bound it
       val before = totals.snap()
       val trigBefore = trig.get
       var walls = List.empty[Double]
@@ -284,9 +271,10 @@ object Bench {
         if (n == 0) 0.0
         else if (n == 1) chron.head
         else { val w = chron.tail.sorted; w((w.length - 1) / 2) }
-      val taskSec = if (n == 0) 0.0 else (after._1 - before._1) / 1e3 / n
+      val d = after - before
+      val taskSec = if (n == 0) 0.0 else d.taskMs / 1e3 / n
       val shMb = if (n == 0) 0.0
-        else (after._2 - before._2 + after._3 - before._3) / 1e6 / n
+        else (d.shuffleReadBytes + d.shuffleWriteBytes) / 1e6 / n
       val trigN = if (n == 0) 0L else (trig.get - trigBefore) / n
       name -> ((med, chron, taskSec, shMb, trigN))
     }
@@ -311,8 +299,8 @@ object Bench {
       case (n, (_, _, _, _, t)) if n.startsWith("stream_") => t
     }.sum
     def fmt(v: Double): String = f"$v%.3f"
-    def line(qs: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$fj,"layer_build":${fmt(layerSec)},"stream_subtotal":${fmt(streamSub)},"stream_triggers":$streamTrig,"task_total":${fmt(taskTotal)},"sf":"$sfDir"}"""
+    def line(qs: String, extra: String = ""): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$fj,"layer_build":${fmt(layerSec)},"stream_subtotal":${fmt(streamSub)},"stream_triggers":$streamTrig,"task_total":${fmt(taskTotal)},"sf":"$sfDir"$extra}"""
     // The harness that invokes this main captures only the LAST ~2000
     // characters of output and parses the JSON line out of that window, so
     // the line printed to stdout must stay well under 2000 bytes end to
@@ -348,10 +336,15 @@ object Bench {
         ",\"task_sec\":" + fmt(task) + ",\"shuffle_mb\":" + fmt(sh) +
         (if (trigN > 0) ",\"triggers\":" + trigN else "") + "}"
     }.mkString("{", ",", "}")
+    import scala.jdk.CollectionConverters._
+    val lf = layerFailed.asScala.mkString(",\"layer_failed\":[", ",", "]")
     try {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
-      try w.println(line(fullQs)) finally w.close()
-    } catch { case _: Throwable => }
+      try w.println(line(fullQs, lf)) finally w.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] BENCH_FULL.json write failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+    }
     val budget = 1500 - line("{}").length
     val sb = new StringBuilder
     var restSum = 0.0

@@ -40,42 +40,6 @@ object Conf {
       "spark.sql.adaptive.skewJoin.enabled" -> "true")
   }
 
-  /** Engine defaults every driver entrypoint applies (Bench, Verify,
-    * the Prof and plan-dump mains) — currently EMPTY, kept as the one
-    * place a measured global engine conf would land.
-    *
-    * Measured and REJECTED here (r14, full 228-query bench, sf0.1,
-    * local[32], interleaved off/on/off/on pairs to defeat box drift):
-    *
-    *  - `canChangeCachedPlanOutputPartitioning=true` (+ a 256k
-    *    `coalescePartitions.minPartitionSize` floor): lets AQE size
-    *    partitions inside `.cache()`d plans. Collapses the per-task
-    *    fixed cost of every stage re-scanning a memoized artifact
-    *    (paired min-medians: dedup_quality_report 0.82→0.51 s,
-    *    dedup_lsh_curve_capped 0.63→0.31, dedup_cross_source
-    *    0.47→0.29; task_total −18 %) — but byte-based coalescing
-    *    cannot see COMPUTE density, so it serialized byte-light
-    *    expensive stages elsewhere: text_repetition task 2.25→12.5 s
-    *    (wall 0.78→1.16), text_bm25 task 1.1→3.2, a28_hll_distinct
-    *    0.29→0.53 s, and the stream family's cached static join sides
-    *    coalesced under micro-batches (8 stream queries +0.2–0.5 s
-    *    each). Paired geomean 0.983 — a wash that trades one query
-    *    family against another. Rejected as a global; the same win is
-    *    taken surgically instead by sizing the artifact CACHES
-    *    themselves at build time ([[graft.ops.Parts]]), which touches
-    *    only the paths that measured faster.
-    */
-  val engineDefaults: Map[String, String] = Map.empty
-
-  /** Fold [[engineDefaults]] into a session builder (explicit
-    * `.config()` calls made later still win). `GRAFT_ENGINE_DEFAULTS=off`
-    * skips them — the A/B escape used to dump the before/after plan
-    * evidence; every driver path leaves it unset.
-    */
-  def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    if (sys.env.get("GRAFT_ENGINE_DEFAULTS").contains("off")) b
-    else engineDefaults.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
   /** Parse a tier name (the `SPARK_GRAFT_TIER` env convention). */
   def tier(name: String): Tier = name.trim.toLowerCase match {
     case "corpus" | "corpusscale" | "large" => CorpusScale

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Plan-inspection utility: prints the formatted physical plan for the
-  * named queries (or a summary line for all) so shuffle/broadcast/pushdown
-  * regressions are visible. `runMain graft.Explain [sfDir] [query...]`.
-  *
-  * [[counters]] is the reusable core — ExtensionsSpec pins the counts for
-  * the most expensive queries, so an accidentally added exchange fails CI
-  * instead of surfacing as a bench regression two rounds later.
+/** Plan inspection: operator counts that make shuffle/broadcast/pushdown
+  * regressions visible (`ProfQuery ... plan` prints them per query).
+  * ExtensionsSpec pins [[counters]] for the most expensive queries, so an
+  * accidentally added exchange fails CI instead of surfacing as a bench
+  * regression two rounds later.
   */
 object Explain {
 
@@ -110,33 +108,5 @@ object Explain {
         .map(_.group(1)).toSet.size,
       "pushedFilterScans" -> "PushedFilters: \\[[^\\]]".r
         .findAllIn(plan).size)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try {
-          val df = fn(spark, sfDir)
-          val c = counters(df)
-          println(f"PLAN $n%-28s shuffles=${c("shuffles")} " +
-            f"bcastJoin=${c("broadcasts")} sortMergeJoin=${c("sortMergeJoins")} " +
-            f"nestedLoop=${c("nestedLoopJoins")} " +
-            f"codegenSpans=${c("codegenSpans")} pushedFilterScans=${c("pushedFilterScans")}")
-          if (args.length > 1) println(df.queryExecution.executedPlan.toString)
-        } catch { case e: Throwable => println(s"PLAN $n ERROR: ${e.getMessage}") }
-      }
-    }
-    spark.stop()
   }
 }

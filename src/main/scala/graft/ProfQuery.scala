@@ -1,114 +1,159 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-/** Single-query profile with executor-task attribution:
-  * `runMain graft.ProfQuery <sfDir> <query> [query...]` runs each named
-  * query twice (cold = first-touch index/cache builds, warm = steady
-  * state) and prints wall seconds, summed executor task seconds, and
-  * shuffle MB per run — the same signals Bench records, without paying
-  * for the other 150+ queries.
+/** Profiler over the Bench session shape, one mode per lens:
+  *
+  * {{{
+  * runMain graft.ProfQuery <sfDir> [query] <q...>
+  * runMain graft.ProfQuery <sfDir> layer
+  * runMain graft.ProfQuery <sfDir> stream <q...>
+  * runMain graft.ProfQuery <sfDir> plan <outDir> <label> <q...>
+  * }}}
+  *
+  *  - `query` (the default): each named query runs twice (cold =
+  *    first-touch index/cache builds, warm = steady state), printing
+  *    wall, executor task seconds, GC and shuffle MB per run, then the
+  *    run's heaviest stages — the lens for "WHICH operator grew".
+  *  - `layer`: the stage→DWH→QA chain (the bench's `layer_build`
+  *    critical path) phase by phase with task-second attribution, so a
+  *    layer regression is blamed on a phase instead of a lump.
+  *  - `stream`: `query` plus every micro-batch's duration breakdown
+  *    (triggerExecution, addBatch, walCommit, ...) and state-operator
+  *    totals — the lens for "wall ≫ task, WHICH part of the micro-batch
+  *    machinery is waiting".
+  *  - `plan`: runs each query, then writes its post-execution formatted
+  *    plan (final adaptive plan, runtime coalescing visible) to
+  *    `<outDir>/<q>_<label>.txt` and prints its operator counts.
+  *
+  * `SPARK_GRAFT_TIER=corpus` applies the measured deployment profile
+  * ([[graft.Conf]]) on top of the session.
   */
 object ProfQuery {
+  private val usage = "usage: ProfQuery <sfDir> " +
+    "[query|layer|stream|plan <outDir> <label>] <q...>"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ProfQuery <sfDir> <query> [query...]")
+    require(args.length >= 2, usage)
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_PARTS decouples shuffle partitions from cores: the
-    // scale-exponent methodology holds rows-per-task constant the way a
-    // real cluster does (partitions ∝ data), isolating per-row cost
-    // from the n·log(n/P) per-partition sort factor
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    // SPARK_GRAFT_TIER=corpus applies the measured deployment profile
-    // (graft.Conf); SPARK_GRAFT_CONFS="k=v;k=v" layers arbitrary extra
-    // confs for A/B experiments on top (explicit confs win).
-    val tierConfs = sys.env.get("SPARK_GRAFT_TIER")
-      .map(t => Conf.profile(Conf.tier(t))).getOrElse(Map.empty)
-    val extra = (tierConfs ++ sys.env.get("SPARK_GRAFT_CONFS").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }).toSeq
-    val spark = extra.foldLeft(Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val taskMs = new AtomicLong
-    val gcMs = new AtomicLong
-    val shB = new AtomicLong
-    // SPARK_GRAFT_STAGES=1: per-stage task-sec attribution (top stages
-    // printed after each run) — the lens for "the total is superlinear,
-    // WHICH operator grew"
-    val stageAttribution = sys.env.get("SPARK_GRAFT_STAGES").contains("1")
-    val stageMs = new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]
-    val stageGc = new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]
-    val stageRows = new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]
-    val stageOut = new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]
-    val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          shB.addAndGet(m.shuffleReadMetrics.totalBytesRead
-            + m.shuffleWriteMetrics.bytesWritten)
-          if (stageAttribution) {
-            stageMs.computeIfAbsent(te.stageId, _ => new AtomicLong)
-              .addAndGet(m.executorRunTime)
-            stageGc.computeIfAbsent(te.stageId, _ => new AtomicLong)
-              .addAndGet(m.jvmGCTime)
-            stageRows.computeIfAbsent(te.stageId, _ => new AtomicLong)
-              .addAndGet(m.inputMetrics.recordsRead
-                + m.shuffleReadMetrics.recordsRead)
-            stageOut.computeIfAbsent(te.stageId, _ => new AtomicLong)
-              .addAndGet(m.outputMetrics.recordsWritten
-                + m.shuffleWriteMetrics.recordsWritten)
-          }
-        }
-      }
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (stageAttribution) {
-          // callsite name is often an executor-thread frame; the first
-          // graft line of the long-form details names the operator
-          val graftLine = ss.stageInfo.details.linesIterator
-            .find(_.contains("graft")).getOrElse("").trim
-          stageName.put(ss.stageInfo.stageId,
-            s"${ss.stageInfo.name} | $graftLine")
-        }
-    })
-    args.drop(1).foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
+    sys.env.get("SPARK_GRAFT_TIER").foreach(t => Conf(spark, Conf.tier(t)))
+    val totals = new Session.TaskTotals
+    spark.sparkContext.addSparkListener(totals)
+    args(1) match {
+      case "layer" => layer(spark, sfDir, totals)
+      case "stream" =>
+        spark.streams.addListener(BatchPrinter)
+        queries(spark, sfDir, totals, args.drop(2))
+      case "plan" =>
+        require(args.length >= 5, usage)
+        plans(spark, sfDir, args(2), args(3), args.drop(4))
+      case "query" => queries(spark, sfDir, totals, args.drop(2))
+      case _ => queries(spark, sfDir, totals, args.drop(1))
+    }
+    spark.stop()
+  }
+
+  private def query(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def queries(spark: SparkSession, sfDir: String,
+      totals: Session.TaskTotals, names: Seq[String]): Unit = {
+    require(names.nonEmpty, usage)
+    names.foreach { name =>
+      val fn = query(name)
       Seq("cold", "warm").foreach { label =>
-        val (t0, g0, s0) = (taskMs.get, gcMs.get, shB.get)
+        totals.drainStages()
+        val s0 = totals.snap()
         val w0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        noop(fn(spark, sfDir))
         val wall = (System.nanoTime() - w0) / 1e9
+        val d = totals.snap() - s0
         println(f"PROFQ $name%-26s $label%-5s wall=$wall%7.3fs " +
-          f"task=${(taskMs.get - t0) / 1e3}%8.3fs " +
-          f"gc=${(gcMs.get - g0) / 1e3}%7.3fs " +
-          f"shuffle=${(shB.get - s0) / 1e6}%8.1fMB")
-        if (stageAttribution) {
-          import scala.jdk.CollectionConverters._
-          stageMs.asScala.toSeq.sortBy(-_._2.get).take(12).foreach {
-            case (sid, ms) =>
-              val rIn = Option(stageRows.get(sid)).map(_.get).getOrElse(0L)
-              val rOut = Option(stageOut.get(sid)).map(_.get).getOrElse(0L)
-              val gc = Option(stageGc.get(sid)).map(_.get).getOrElse(0L)
-              println(f"  STAGE $sid%5d ${ms.get / 1e3}%8.3fs " +
-                f"gc=${gc / 1e3}%6.3fs in=$rIn%10d out=$rOut%10d  " +
-                stageName.getOrDefault(sid, "?").take(90))
-          }
-          stageMs.clear(); stageGc.clear(); stageRows.clear(); stageOut.clear()
+          f"task=${d.taskMs / 1e3}%8.3fs " +
+          f"gc=${d.gcMs / 1e3}%7.3fs " +
+          f"shuffle=${(d.shuffleReadBytes + d.shuffleWriteBytes) / 1e6}%8.1fMB")
+        totals.drainStages().take(12).foreach { s =>
+          println(f"  STAGE ${s.id}%5d ${s.taskMs / 1e3}%8.3fs " +
+            f"gc=${s.gcMs / 1e3}%6.3fs in=${s.rowsIn}%10d out=${s.rowsOut}%10d  " +
+            s.name.take(90))
         }
       }
     }
-    spark.stop()
+  }
+
+  /** Phase by phase, mirroring Dwh.materialized's dependency chain. The
+    * finer pre-phases attribute the stage build's cost: the 3-source
+    * fact union + key window, the enrichment chain (two as-of merges +
+    * junk linkage, cache fill), then the boundary write reusing it.
+    */
+  private def layer(spark: SparkSession, dir: String,
+      totals: Session.TaskTotals): Unit = {
+    def timed[T](what: String)(body: => T): T = {
+      val (t0, s0) = (System.nanoTime(), totals.snap())
+      val r = body
+      println(f"[proflayer] $what%-28s wall=${(System.nanoTime() - t0) / 1e9}%6.2fs " +
+        f"task=${(totals.snap() - s0).taskMs / 1e3}%7.2fs")
+      r
+    }
+    timed("  stage: factRaw")(noop(etl.Stage.factRaw(spark, dir)))
+    timed("  stage: factEnriched")(etl.Stage.factEnriched(spark, dir).count())
+    timed("  stage: dims")(etl.Stage.build(spark, dir)
+      .filterNot(_._1 == "fact").foreach { case (_, df) => df.count(); () })
+    val stage = timed("stage write (cached build)")(
+      etl.Stage.materialized(spark, dir))
+    timed("dwh fact (cached)")(etl.Dwh.factDwh(stage).count())
+    timed("dwh build+write")(etl.Dwh.materialized(spark, dir))
+    timed("qa report")(etl.Qa.report(spark, dir))
+    ()
+  }
+
+  private def plans(spark: SparkSession, sfDir: String, outDir: String,
+      label: String, names: Seq[String]): Unit = {
+    require(names.nonEmpty, usage)
+    new java.io.File(outDir).mkdirs()
+    names.foreach { name =>
+      val df = query(name)(spark, sfDir)
+      // execute THIS QueryExecution's plan (a write or collect would
+      // plan a new one) so the adaptive plan below is the final one
+      df.queryExecution.executedPlan.execute().foreach(_ => ())
+      val txt = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val path = s"$outDir/${name}_$label.txt"
+      val w = new java.io.PrintWriter(path)
+      try w.println(txt) finally w.close()
+      val c = Explain.counters(df)
+      println(f"PLAN $name%-28s shuffles=${c("shuffles")} " +
+        f"bcastJoin=${c("broadcasts")} sortMergeJoin=${c("sortMergeJoins")} " +
+        f"nestedLoop=${c("nestedLoopJoins")} " +
+        f"codegenSpans=${c("codegenSpans")} " +
+        f"pushedFilterScans=${c("pushedFilterScans")} -> $path")
+    }
+  }
+
+  private object BatchPrinter extends StreamingQueryListener {
+    override def onQueryStarted(
+        e: StreamingQueryListener.QueryStartedEvent): Unit =
+      println(s"PROFS start ${e.name}")
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      import scala.jdk.CollectionConverters._
+      val dur = p.durationMs.asScala.toSeq.sortBy(-_._2)
+        .map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
+      val st = Option(p.stateOperators).getOrElse(Array.empty)
+        .map(s => s"rows=${s.numRowsTotal} updated=${s.numRowsUpdated} " +
+          s"commitMs=${s.commitTimeMs} mem=${s.memoryUsedBytes}")
+        .mkString(" | ")
+      println(s"PROFS batch=${p.batchId} rows=${p.numInputRows} $dur" +
+        (if (st.nonEmpty) s"\nPROFS   state: $st" else ""))
+    }
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 }

@@ -6,12 +6,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * caches, per-invocation checkpoints).
   *
   * Why this exists: a `.cache()`/`localCheckpoint()` freezes its frame's
-  * partition count — AQE does not re-plan inside cached plans (by
-  * default, and the global escape was measured and rejected; see
-  * [[graft.Conf.engineDefaults]]) — so an artifact built under the
-  * session's shuffle partitioning keeps that many partitions no matter
-  * how small it is, and EVERY downstream stage that re-scans it launches
-  * that many tasks. At bench scale the per-task fixed cost (scheduling,
+  * partition count — AQE does not re-plan inside cached plans — so an
+  * artifact built under the session's shuffle partitioning keeps that
+  * many partitions no matter how small it is, and EVERY downstream stage
+  * that re-scans it launches that many tasks. (The global escape,
+  * `canChangeCachedPlanOutputPartitioning`, was A/B'd in r14 and rejected
+  * at paired geomean 0.983: byte-based coalescing cannot see compute
+  * density, so it serialized byte-light expensive stages such as
+  * text_repetition, task 2.25 → 12.5 s.)
+  * At bench scale the per-task fixed cost (scheduling,
   * codegen setup, cache-read locking) dominates those stages: the
   * dedup-quality family burned 12–28 task-sec/rep on frames of a few MB.
   * At 100 TB the same constant would under-partition, so the count must

@@ -280,14 +280,18 @@ object Warehouse extends OpGroup {
       |FROM nation""".stripMargin
 
   /** S2/S8: register the harness tables as namespaced temp views and list
-    * them from the catalog (SHOW TABLES semantics, DWH.sql:215).
+    * them from the catalog (SHOW TABLES semantics, DWH.sql:215). The
+    * listing keeps only the views registered here: other ops register
+    * `graft_*` views of their own on the same session (s_sql_functions'
+    * graft_fn_docs / graft_fn_emb).
     */
   def catalogTables(s: SparkSession, dir: String): DataFrame = {
+    val views = Tables.all.map(n => s"graft_$n").toSet
     Tables.all.foreach(n =>
       Tables.load(s, dir, n).createOrReplaceTempView(s"graft_$n"))
     import s.implicits._
     s.catalog.listTables()
-      .filter(_.name.startsWith("graft_"))
+      .filter(t => views.contains(t.name))
       .map(_.name.stripPrefix("graft_"))
       .toDF("table_name")
   }

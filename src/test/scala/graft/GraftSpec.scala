@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   val dir = "/root/testdata/sf0.001"
 
@@ -264,6 +259,71 @@ class GraftSpec extends AnyFunSuite {
     } finally cached.unpersist()
   }
 
+  // Count CALL SITES, not raw text hits: comments are stripped first
+  // (a doc-comment mentioning `.cache()` is prose, and counting it
+  // made an innocuous comment edit fail this sweep with a misleading
+  // message). String literals are preserved — `//` inside a SQL
+  // string must not eat the rest of its line.
+  private def stripComments(txt: String): String = {
+    val out = new StringBuilder(txt.length)
+    var i = 0
+    var mode = 0 // 0 code, 1 line comment, 2 block comment, 3 "…", 4 """…"""
+    while (i < txt.length) {
+      val c = txt.charAt(i)
+      mode match {
+        case 0 =>
+          if (txt.startsWith("//", i)) { mode = 1; i += 2 }
+          else if (txt.startsWith("/*", i)) { mode = 2; i += 2 }
+          else if (txt.startsWith("\"\"\"", i)) {
+            mode = 4; out.append("\"\"\""); i += 3
+          }
+          // Char literal ('x', '\n', '"', '\''): consume whole —
+          // a '"' inside one must NOT open string mode, or the
+          // scanner hides the rest of the line from the sweep.
+          else if (c == '\'' && i + 2 < txt.length &&
+              (txt.charAt(i + 1) == '\\' || txt.charAt(i + 2) == '\'')) {
+            val close =
+              if (txt.charAt(i + 1) == '\\') txt.indexOf('\'', i + 3)
+              else i + 2
+            if (close < 0) { out.append(c); i += 1 }
+            else { out.append(txt.substring(i, close + 1)); i = close + 1 }
+          }
+          else if (c == '"') { mode = 3; out.append(c); i += 1 }
+          else { out.append(c); i += 1 }
+        case 1 =>
+          if (c == '\n') { mode = 0; out.append(c) }
+          i += 1
+        case 2 =>
+          if (txt.startsWith("*/", i)) { mode = 0; i += 2 }
+          else { if (c == '\n') out.append(c); i += 1 }
+        case 3 =>
+          out.append(c)
+          if (c == '\\' && i + 1 < txt.length) {
+            out.append(txt.charAt(i + 1)); i += 2
+          } else { if (c == '"' || c == '\n') mode = 0; i += 1 }
+        case _ =>
+          if (txt.startsWith("\"\"\"", i)) {
+            mode = 0; out.append("\"\"\""); i += 3
+          } else { out.append(c); i += 1 }
+      }
+    }
+    out.toString
+  }
+
+  /** Every source file under src/main/scala/graft: (path relative to it,
+    * text).
+    */
+  private def mainSources(): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { walk =>
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString.replace('\\', '/') ->
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+        .toList
+    }
+  }
+
   test("cache-retention sweep: every persist/cache site is classified") {
     // Memo's bounded retention releases only frames it OWNS (the
     // top-level DataFrame of a Memo.of builder); a bare `.persist()` /
@@ -273,72 +333,13 @@ class GraftSpec extends AnyFunSuite {
     // until it is either routed through Memo, released by its builder
     // (try/finally), or classified here with its release story — the
     // window audit's discipline applied to executor storage.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
     val pat = java.util.regex.Pattern.compile("\\.persist\\(|\\.cache\\(\\)")
-    // Count CALL SITES, not raw text hits: comments are stripped first
-    // (a doc-comment mentioning `.cache()` is prose, and counting it
-    // made an innocuous comment edit fail this sweep with a misleading
-    // message). String literals are preserved — `//` inside a SQL
-    // string must not eat the rest of its line.
-    def stripComments(txt: String): String = {
-      val out = new StringBuilder(txt.length)
-      var i = 0
-      var mode = 0 // 0 code, 1 line comment, 2 block comment, 3 "…", 4 """…"""
-      while (i < txt.length) {
-        val c = txt.charAt(i)
-        mode match {
-          case 0 =>
-            if (txt.startsWith("//", i)) { mode = 1; i += 2 }
-            else if (txt.startsWith("/*", i)) { mode = 2; i += 2 }
-            else if (txt.startsWith("\"\"\"", i)) {
-              mode = 4; out.append("\"\"\""); i += 3
-            }
-            // Char literal ('x', '\n', '"', '\''): consume whole —
-            // a '"' inside one must NOT open string mode, or the
-            // scanner hides the rest of the line from the sweep.
-            else if (c == '\'' && i + 2 < txt.length &&
-                (txt.charAt(i + 1) == '\\' || txt.charAt(i + 2) == '\'')) {
-              val close =
-                if (txt.charAt(i + 1) == '\\') txt.indexOf('\'', i + 3)
-                else i + 2
-              if (close < 0) { out.append(c); i += 1 }
-              else { out.append(txt.substring(i, close + 1)); i = close + 1 }
-            }
-            else if (c == '"') { mode = 3; out.append(c); i += 1 }
-            else { out.append(c); i += 1 }
-          case 1 =>
-            if (c == '\n') { mode = 0; out.append(c) }
-            i += 1
-          case 2 =>
-            if (txt.startsWith("*/", i)) { mode = 0; i += 2 }
-            else { if (c == '\n') out.append(c); i += 1 }
-          case 3 =>
-            out.append(c)
-            if (c == '\\' && i + 1 < txt.length) {
-              out.append(txt.charAt(i + 1)); i += 2
-            } else { if (c == '"' || c == '\n') mode = 0; i += 1 }
-          case _ =>
-            if (txt.startsWith("\"\"\"", i)) {
-              mode = 0; out.append("\"\"\""); i += 3
-            } else { out.append(c); i += 1 }
-        }
-      }
-      out.toString
-    }
-    val found = scala.util.Using.resource(java.nio.file.Files.walk(root)) {
-      walk =>
-        walk.iterator().asScala
-          .filter(_.toString.endsWith(".scala"))
-          .map { p =>
-            val txt = stripComments(
-              new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-            val m = pat.matcher(txt)
-            var n = 0
-            while (m.find()) n += 1
-            root.relativize(p).toString.replace('\\', '/') -> n
-          }.filter(_._2 > 0).toMap
-    }
+    val found = mainSources().map { case (f, txt) =>
+      val m = pat.matcher(stripComments(txt))
+      var n = 0
+      while (m.find()) n += 1
+      f -> n
+    }.filter(_._2 > 0).toMap
     val classified: Map[String, (Int, String)] = Map(
       "ops/SimilarityOps.scala" -> ((14,
         "13 Memo-owned top frames (ivfCells input+probe table, mipsAug, " +
@@ -355,9 +356,6 @@ class GraftSpec extends AnyFunSuite {
         "Memo-owned: shingleRows, bandTable, cappedBands, shingles, " +
           "cappedShingleRows, cappedShingleSets, clusters, " +
           "contamShingleRows")),
-      "ProfTri.scala" -> ((1,
-        "profiling-main-only synthetic edge list, unpersisted in-run " +
-          "and released with the main's session")),
       "ops/AnalyticsOps.scala" -> ((2,
         "Memo-owned: attributionJoined, attributionPer (the r8 leak, " +
           "fixed by routing through Memo)")),
@@ -391,6 +389,32 @@ class GraftSpec extends AnyFunSuite {
         "Memo.of (bounded retention), release intermediates in the " +
         "builder, or classify here with the release story:\n  " +
         diffs.mkString("\n  "))
+  }
+
+  test("one session builder: every main builds through Session.local") {
+    // Each main once copied its own builder block, and their defaults
+    // drifted apart (4 / 8 / 32 cores when SPARK_GRAFT_CPUS was unset),
+    // so a profile or plan dump ran a different session than the bench.
+    val builders = mainSources().map { case (f, txt) =>
+      f -> java.util.regex.Pattern.quote("SparkSession.builder()").r
+        .findAllIn(stripComments(txt)).size
+    }.filter(_._2 > 0).toMap
+    assert(builders == Map("Session.scala" -> 1),
+      s"SparkSession.builder() outside Session.scala: $builders")
+    val hook = mainSources().collect {
+      case (f, txt) if Seq("engineDefaults", "withEngineDefaults",
+          "GRAFT_ENGINE_DEFAULTS").exists(txt.contains) => f
+    }
+    assert(hook.isEmpty, s"engine-defaults hook is back in: $hook")
+  }
+
+  test("s_catalog_tables lists only its own views after s_sql_functions") {
+    // s_sql_functions registers graft_fn_docs / graft_fn_emb on the same
+    // session; the catalog listing must not count them
+    sources.Warehouse.sqlFunctions(spark, dir).count()
+    val t = SparkEntry.queries("s_catalog_tables")(spark, dir)
+      .collect().map(_.getString(0)).toSeq.sorted
+    assert(t == Tables.all.sorted, s"catalog listing: $t")
   }
 
   test("every query has an oracle or documented omission") {
