@@ -208,12 +208,8 @@ object Bench {
     // accumulating per-invocation checkpoints until a driver GC. Two
     // samples — after layer build and after the measured pass — make
     // that checkable from any bench log.
-    def storageLine(tag: String): Unit = {
-      val infos = spark.sparkContext.getRDDStorageInfo
-      System.err.println(f"[bench] storage $tag: rdds=${infos.length} " +
-        f"mem=${infos.map(_.memSize).sum / 1e6}%.1fMB " +
-        f"disk=${infos.map(_.diskSize).sum / 1e6}%.1fMB")
-    }
+    def storageLine(tag: String): Unit =
+      System.err.println(s"[bench] storage $tag: ${Session.storage(spark)}")
     storageLine("post-layer")
     var failed = List.empty[String]
     // Measurement: up to 3 reps per query (plus one variance-triggered

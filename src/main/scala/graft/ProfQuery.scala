@@ -17,8 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    wall, executor task seconds, GC and shuffle MB per run, then the
   *    run's heaviest stages — the lens for "WHICH operator grew".
   *  - `layer`: the stage→DWH→QA chain (the bench's `layer_build`
-  *    critical path) phase by phase with task-second attribution, so a
-  *    layer regression is blamed on a phase instead of a lump.
+  *    critical path) in the materialized layers' fact-first order, phase
+  *    by phase with task-second attribution and block-manager storage,
+  *    so a layer regression is blamed on a phase instead of a lump.
   *  - `stream`: `query` plus every micro-batch's duration breakdown
   *    (triggerExecution, addBatch, walCommit, ...) and state-operator
   *    totals — the lens for "wall ≫ task, WHICH part of the micro-batch
@@ -87,29 +88,41 @@ object ProfQuery {
     }
   }
 
-  /** Phase by phase, mirroring Dwh.materialized's dependency chain. The
-    * finer pre-phases attribute the stage build's cost: the 3-source
-    * fact union + key window, the enrichment chain (two as-of merges +
-    * junk linkage, cache fill), then the boundary write reusing it.
+  /** Phase by phase, in the order `Warehouse.materializedLayer` builds
+    * each layer: the stage fact, the stage tables besides it (dim_junk
+    * and dim_date built from the written fact), the DWH fact, the DWH
+    * tables besides it (the pre-aggregation from the written fact), then
+    * QA over the two written layers. The layers land under a root of
+    * their own, so the session's memoized layers stay untouched.
     */
   private def layer(spark: SparkSession, dir: String,
       totals: Session.TaskTotals): Unit = {
     def timed[T](what: String)(body: => T): T = {
       val (t0, s0) = (System.nanoTime(), totals.snap())
       val r = body
-      println(f"[proflayer] $what%-28s wall=${(System.nanoTime() - t0) / 1e9}%6.2fs " +
-        f"task=${(totals.snap() - s0).taskMs / 1e3}%7.2fs")
+      println(f"[proflayer] $what%-24s wall=${(System.nanoTime() - t0) / 1e9}%6.2fs " +
+        f"task=${(totals.snap() - s0).taskMs / 1e3}%7.2fs " +
+        Session.storage(spark))
       r
     }
-    timed("  stage: factRaw")(noop(etl.Stage.factRaw(spark, dir)))
-    timed("  stage: factEnriched")(etl.Stage.factEnriched(spark, dir).count())
-    timed("  stage: dims")(etl.Stage.build(spark, dir)
-      .filterNot(_._1 == "fact").foreach { case (_, df) => df.count(); () })
-    val stage = timed("stage write (cached build)")(
-      etl.Stage.materialized(spark, dir))
-    timed("dwh fact (cached)")(etl.Dwh.factDwh(stage).count())
-    timed("dwh build+write")(etl.Dwh.materialized(spark, dir))
-    timed("qa report")(etl.Qa.report(spark, dir))
+    val root = sources.Warehouse.layerPath(dir, "proflayer")
+    def phases(name: String, tables: => Map[String, DataFrame],
+        derived: DataFrame => Map[String, DataFrame]) = {
+      val (t, fact) = timed(s"$name fact") {
+        val t = tables
+        (t, sources.Warehouse.land(spark, s"$root/$name",
+          t.filter(_._1 == "fact")))
+      }
+      fact ++ timed(s"$name tables + derived")(sources.Warehouse.land(
+        spark, s"$root/$name", (t - "fact") ++ derived(fact("fact"))))
+    }
+    val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val stage = phases("stage", etl.Stage.tables(spark, dir,
+      checkpoints += _), etl.Stage.derivedTables)
+    // as the stage layer does once it is written
+    checkpoints.foreach(org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint)
+    val dwh = phases("dwh", etl.Dwh.tables(stage), etl.Dwh.derivedTables)
+    timed("qa report")(etl.Qa.reportOf(stage, dwh))
     ()
   }
 

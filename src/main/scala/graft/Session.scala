@@ -24,6 +24,15 @@ object Session {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Block-manager storage right now: cached/checkpointed RDD count and
+    * their memory and disk MB.
+    */
+  def storage(spark: SparkSession): String = {
+    val infos = spark.sparkContext.getRDDStorageInfo
+    f"rdds=${infos.length} mem=${infos.map(_.memSize).sum / 1e6}%.1fMB " +
+      f"disk=${infos.map(_.diskSize).sum / 1e6}%.1fMB"
+  }
+
   /** Cumulative executor-task counters; subtract two snapshots to charge
     * the work between them.
     */

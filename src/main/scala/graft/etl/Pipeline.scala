@@ -12,11 +12,11 @@ object Pipeline extends OpGroup {
 
   override val ops: Seq[Op] = Seq(
     Op("pipe_stage_concepts",
-      (s, dir) => Stage.dimConcepts(s, dir),
+      (s, dir) => Stage.materialized(s, dir)("dim_concepts"),
       Some(PipelineSql.q("SELECT * FROM dim_concepts")),
       "Stage_area.sql:76-113 concept dim: 3-source union + Unknown member"),
     Op("pipe_stage_provider",
-      (s, dir) => Stage.dimProvider(s, dir),
+      (s, dir) => Stage.materialized(s, dir)("dim_provider"),
       Some(PipelineSql.q("SELECT * FROM dim_provider")),
       "Stage_area.sql:56-70 provider dim with ROW_NUMBER surrogate"),
     Op("pipe_stage_fact",

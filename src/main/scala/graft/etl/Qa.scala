@@ -19,34 +19,29 @@ import org.apache.spark.sql.functions._
   *  - the fact gets one pass with 5 broadcast flag-joins (dim keys are
   *    deduped, so no row multiplication) yielding its count and all 5
   *    orphan counts — families 1 and 3 in one job, no fact shuffle;
-  *  - family 2 reuses the cached fact for one hash-agg job.
+  *  - family 2 sums the written pre-aggregation table, as QA.sql:67-71
+  *    does, so a bad aggregate write shows as a nonzero diff.
   * The 18 scalars then form a local 18-row DataFrame. At 100 TB the
-  * cost is 8 passes over cached/columnar data instead of ~20.
+  * cost is a few passes over columnar files instead of ~20.
   */
 object Qa {
 
-  private val prof = sys.env.contains("GRAFT_QA_PROF")
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    if (prof) println(f"QAPROF $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-    r
-  }
-
   /** The report is EAGER (fused scalars collected and assembled locally),
     * so memoize per (session, dir): a caller that merely registers the
-    * qa_report view must not re-run the 18 reconciliation jobs.
+    * qa_report view must not re-run the 18 reconciliation jobs. Every
+    * family reads the materialized layers (the reference's QA.sql reads
+    * the MariaDB tables), so this also end-to-end-verifies the
+    * write→read roundtrip.
     */
   def report(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "qaReport")(buildReport(s, dir))
+    graft.ops.Memo.of(s, dir, "qaReport")(
+      reportOf(Stage.materialized(s, dir), Dwh.materialized(s, dir)))
 
-  private def buildReport(s: SparkSession, dir: String): DataFrame = {
-    // File-backed stage layer: every QA family reads the materialized
-    // parquet (the reference's QA.sql reads the MariaDB tables), so this
-    // also end-to-end-verifies the write→read roundtrip.
-    val stage = Stage.materialized(s, dir)
-    // DWH fact from the materialized DWH layer: file scans, shared with
-    // every other DWH consumer instead of a per-report dedup+guard run.
-    val fact = Dwh.materialized(s, dir)("fact")
+  /** The report over a stage and a DWH layer. */
+  private[graft] def reportOf(stage: Map[String, DataFrame],
+      dwh: Map[String, DataFrame]): DataFrame = {
+    val s = stage("fact").sparkSession
+    val fact = dwh("fact")
 
     // Per-dim fused scalars: stage row count (family 1 lhs), distinct row
     // count (family 1 rhs — DWH dims are dedup copies), duplicate-PK-key
@@ -69,13 +64,9 @@ object Qa {
       ("dim_concepts", "code"),
       ("dim_junk", "junk_id"),
       ("dim_date", "date_id"))
-    // Warm the two shared caches sequentially (every scalar below reads
-    // them; concurrent first-materialization would duplicate the work),
-    // then run the per-table scalar jobs concurrently — Spark's scheduler
-    // interleaves small jobs, so wall time ≈ the slowest scalar, not the sum.
-    val factStageCnt = timed("stageFactCount")(stage("fact").count())
-    val factDwhCnt = timed("dwhFactCount")(fact.count())
-
+    // The per-table scalar jobs run concurrently — Spark's scheduler
+    // interleaves small jobs, so wall time ≈ the slowest scalar, not the
+    // sum.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -83,8 +74,10 @@ object Qa {
     import scala.concurrent.duration.Duration
 
     val statsF = dimSpecs.map { case (t, key) =>
-      Future(t -> timed(s"dimStats($t)")(dimStats(stage(t), key)))
+      Future(t -> dimStats(stage(t), key))
     }
+    val factStageCntF = Future(stage("fact").count())
+    val factDwhCntF = Future(fact.count())
 
     // Fact fused pass: COUNT(*) + the 5 orphan counts (J7 anti-join
     // semantics: FK not null and no dim match) via broadcast flag-joins.
@@ -111,18 +104,17 @@ object Qa {
       orphanSpecs.zipWithIndex.map { case ((_, key, _, _), i) =>
         sum(when(col(key).isNotNull && col(s"_f$i").isNull, 1L).otherwise(0L))
       }: _*)
-    val factRowF = Future(timed("factFused")(factRow.head))
-    val aggSumF = Future(timed("aggSum")(Dwh.aggPerAdmission(fact)
-      .agg(sum(col("total_events"))).head.getLong(0)))
+    val factRowF = Future(factRow.head)
+    val aggSumF = Future(dwh("agg_disorders_per_admission")
+      .agg(sum(col("total_events"))).head.getLong(0))
 
-    val (stats, factRow2, aggSum) =
-      try {
-        (Await.result(Future.sequence(statsF), Duration.Inf).toMap,
-          Await.result(factRowF, Duration.Inf),
-          Await.result(aggSumF, Duration.Inf))
-      } finally pool.shutdown()
+    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+    val (stats, factStageCnt, factDwhCnt, factRow2, aggSum) =
+      try (await(Future.sequence(statsF)).toMap, await(factStageCntF),
+        await(factDwhCntF), await(factRowF), await(aggSumF))
+      finally pool.shutdown()
     require(factRow2.getLong(0) == factDwhCnt,
-      s"fused fact count ${factRow2.getLong(0)} != cached count $factDwhCnt")
+      s"fused fact count ${factRow2.getLong(0)} != plain count $factDwhCnt")
     val orphanCnts = orphanSpecs.indices.map(i => factRow2.getLong(i + 1))
 
     // Assemble the 18-row report (U1 union order preserved from QA.sql).

@@ -39,17 +39,13 @@ object Stage {
 
   // ---- dims --------------------------------------------------------------
 
-  /** dim_patients (Stage_area.sql:25-30). Broadcast-sized; cached because
-    * the fact build, DWH guards and QA families all re-read it.
-    */
+  /** dim_patients (Stage_area.sql:25-30). */
   def dimPatients(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "dimPatients")(
-      Relational.projectRename(s, dir).cache())
+    Relational.projectRename(s, dir)
 
   /** dim_admissions with sentinel conform (Stage_area.sql:36-50). */
   def dimAdmissions(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "dimAdmissions")(
-      Relational.sentinelConform(s, dir).cache())
+    Relational.sentinelConform(s, dir)
 
   /** dim_provider (Stage_area.sql:56-70): transfers analog = purchase
     * events; ROW_NUMBER surrogate key over a pinned natural order.
@@ -63,23 +59,19 @@ object Stage {
     * the numbering is identical to `ROW_NUMBER() OVER (ORDER BY
     * provider_id)` and the DuckDB oracle is unchanged; the INT cast
     * mirrors the oracle's `CAST(.. AS INT)` (the reference's INT
-    * AUTO_INCREMENT-style key). Cached — the checkpoint + numbering runs
-    * once per (session, dir).
+    * AUTO_INCREMENT-style key). The numbering's sort checkpoint goes to
+    * `checkpoint`, which releases it once the frame is no longer read.
     */
-  def dimProvider(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "dimProvider")(
-      graft.ops.SurrogateKeys.withGlobalRowNumber(
-        events(s, dir).filter(col("event_type") === "purchase")
-          .select(col("event_id").as("provider_id"),
-            col("user_id").as("patient_id"),
-            col("ts").as("intime"),
-            (col("ts") + expr("INTERVAL 2 DAY")).as("outtime")),
-        "provider_key", Seq(col("provider_id").asc),
-        // the Memo-cached result must survive cache eviction, so its
-        // internal checkpoint is NOT boundary-tracked (Scratch doc)
-        trackScratch = false)
-        .withColumn("provider_key", col("provider_key").cast("int"))
-        .cache())
+  private def dimProvider(s: SparkSession, dir: String,
+      checkpoint: DataFrame => Unit): DataFrame =
+    graft.ops.SurrogateKeys.withGlobalRowNumber(
+      events(s, dir).filter(col("event_type") === "purchase")
+        .select(col("event_id").as("provider_id"),
+          col("user_id").as("patient_id"),
+          col("ts").as("intime"),
+          (col("ts") + expr("INTERVAL 2 DAY")).as("outtime")),
+      "provider_key", Seq(col("provider_id").asc), checkpoint)
+      .withColumn("provider_key", col("provider_key").cast("int"))
 
   /** Lab concepts (Stage_area.sql:85-95 keyword-filtered d_labitems). */
   def conceptsLab(s: SparkSession, dir: String): DataFrame =
@@ -115,7 +107,8 @@ object Stage {
       .distinct()
 
   /** dim_concepts: 3-source union + conditional Unknown member
-    * (Stage_area.sql:76-113, S6/J8).
+    * (Stage_area.sql:76-113, S6/J8). Cached (dim-sized): the fact's OMR
+    * concept join and the dim_concepts write both read it.
     */
   def dimConcepts(s: SparkSession, dir: String): DataFrame =
     graft.ops.Memo.of(s, dir, "dimConcepts") {
@@ -230,10 +223,7 @@ object Stage {
     * NULL) → M4 provider interval link (INNER-update: no match ⇒ untouched,
     * here NULL) → M5 junk-dim null-safe linkage.
     */
-  def factEnriched(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "factEnriched")(buildFactEnriched(s, dir))
-
-  private def buildFactEnriched(s: SparkSession, dir: String): DataFrame = {
+  private def enrichedFact(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
 
     // M2: scalar Unknown backfill (Stage_area.sql:225-231)
@@ -268,21 +258,16 @@ object Stage {
     val pvW = ev.filter(col("event_type") === "purchase").select(
       col("user_id").as("w_user"), col("ts").as("intime"),
       col("event_id").as("w_provider"))
-    // Cached: the junk-dim distinct AND the junk linkage join both scan
-    // f4 — uncached, the whole union + key window + two as-of merges
-    // would execute twice.
     val f4 = graft.plans.AsOf.joinEarliestInWindow(
         f3, pvW, "patient_id", "w_user", "event_datetime", "intime",
         2 * dayUs, "w_provider")
       .select((("event_key" +: factCols :+ "careunit") :+ "w_provider")
         .map(col): _*)
       .withColumnRenamed("w_provider", "provider_id")
-      .cache()
 
-    // M5: junk dim + null-safe linkage (Stage_area.sql:262-283).
-    // The enriched fact is referenced by dim_date, dim_junk, the DWH dedup
-    // and ~20 QA scalar checks — cache it (Spark's cache manager matches
-    // canonicalized plans, so every Stage.build call shares one entry).
+    // M5: junk dim + null-safe linkage (Stage_area.sql:262-283). Both the
+    // junk-dim distinct and the linkage join read f4; the fact write runs
+    // them as one plan, whose identical exchanges AQE reuses.
     val junk = dimJunkFrom(f4)
     f4.join(broadcast(junk),
         f4("source_type") <=> junk("j_source_type") &&
@@ -290,10 +275,11 @@ object Stage {
           f4("careunit") <=> junk("j_careunit"), "left")
       .select((("event_key" +: factCols).map(col) :+ col("careunit") :+
         col("provider_id") :+ col("junk_id")): _*)
-      .cache()
   }
 
-  /** dim_junk from the enriched fact (Stage_area.sql:262-275). */
+  /** dim_junk's surrogate ids over the enriched fact's distinct
+    * (source_type, unit, careunit) triples (Stage_area.sql:262-275).
+    */
   private[graft] def dimJunkFrom(f: DataFrame): DataFrame = {
     val w = Window.orderBy(col("j_source_type").asc_nulls_last,
       col("j_unit").asc_nulls_last, col("j_careunit").asc_nulls_last)
@@ -303,24 +289,21 @@ object Stage {
       .withColumn("junk_id", row_number().over(w))
   }
 
+  /** The enriched fact, dim_junk and dim_date as the stage layer wrote
+    * them (file scans).
+    */
+  def factEnriched(s: SparkSession, dir: String): DataFrame =
+    materialized(s, dir)("fact")
+
   def dimJunk(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "dimJunk") {
-      val f = factEnriched(s, dir)
-      f.select(col("source_type"), col("measurement_unit"), col("careunit"),
-        col("junk_id")).distinct().cache()
-    }
+    materialized(s, dir)("dim_junk")
+
+  def dimDate(s: SparkSession, dir: String): DataFrame =
+    materialized(s, dir)("dim_date")
 
   /** dim_date at distinct-timestamp grain from the fact
     * (Stage_area.sql:119-127, 289-301).
     */
-  def dimDate(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Memo.of(s, dir, "dimDate") {
-      // Distinct-timestamp grain ⇒ ~1 row per fact event; cached because
-      // the DWH guards, QA parity/dup/orphan checks and pipe_stage_dim_date
-      // all re-derive it from the fact (a full-fact shuffle each time).
-      dimDateFrom(factEnriched(s, dir)).cache()
-    }
-
   private[etl] def dimDateFrom(fact: DataFrame): DataFrame =
     fact.select(col("event_datetime").as("date_id")).distinct()
       .select(
@@ -332,33 +315,50 @@ object Stage {
         date_format(col("date_id"), "MMMM").as("month_name"),
         dayofweek(col("date_id")).isin(1, 7).as("is_weekend"))
 
-  /** Full stage layer as a named map (SURVEY.md §3.4 lifecycle). */
+  /** The stage tables that do not read the enriched fact, plus the fact
+    * itself; `checkpoint` receives dim_provider's sort checkpoint.
+    */
+  private[graft] def tables(s: SparkSession, dir: String,
+      checkpoint: DataFrame => Unit): Map[String, DataFrame] = Map(
+    "dim_patients" -> dimPatients(s, dir),
+    "dim_admissions" -> dimAdmissions(s, dir),
+    "dim_provider" -> dimProvider(s, dir, checkpoint),
+    "dim_concepts" -> dimConcepts(s, dir),
+    "fact" -> enrichedFact(s, dir))
+
+  /** The stage tables derived from the enriched fact. */
+  private[graft] def derivedTables(fact: DataFrame)
+      : Map[String, DataFrame] = Map(
+    "dim_junk" -> fact.select(col("source_type"), col("measurement_unit"),
+      col("careunit"), col("junk_id")).distinct(),
+    "dim_date" -> dimDateFrom(fact))
+
+  /** Full stage layer as a named map (SURVEY.md §3.4 lifecycle): the
+    * uncached in-memory definition ([[materialized]] is the file-backed
+    * one). dim_provider's checkpoint is left to [[graft.ops.Scratch]].
+    */
   def build(s: SparkSession, dir: String): Map[String, DataFrame] = {
-    val fact = factEnriched(s, dir)
-    Map(
-      "dim_patients" -> dimPatients(s, dir),
-      "dim_admissions" -> dimAdmissions(s, dir),
-      "dim_provider" -> dimProvider(s, dir),
-      "dim_concepts" -> dimConcepts(s, dir),
-      "dim_junk" -> dimJunk(s, dir),
-      "dim_date" -> dimDate(s, dir),
-      "fact" -> fact)
+    val t = tables(s, dir, graft.ops.Scratch.track(_))
+    t ++ derivedTables(t("fact"))
   }
 
-  /** Absolute materialization root for a scale-factor dir (never a
-    * cwd-relative path — portability).
-    */
   /** Stage layer MATERIALIZED at the stage→DWH boundary — the reference's
     * own layered architecture (every Stage_area.sql statement lands in a
     * MariaDB table before DWH.sql reads it; README.md:42-57). Everything
     * downstream of the stage (DWH dedup/guards, the pre-aggregation, all
     * QA families) reads the parquet files instead of re-deriving a
-    * 60+-shuffle mega-plan whose runtime cost hinges on cache hits.
-    * At 100 TB this is the scale-safe shape: the boundary write is one
-    * linear pass, the files are columnar and partition-pruned
-    * (fact partitioned by source_type), and no downstream plan depends on
-    * executor cache residency.
+    * 60+-shuffle mega-plan. The fact lands first; dim_junk and dim_date
+    * are then built from its file. At 100 TB this is the scale-safe
+    * shape: each write is one linear pass, the files are columnar and
+    * partition-pruned (fact partitioned by source_type), and no plan
+    * depends on executor cache residency. dim_provider's checkpoint is
+    * released once the layer is written: nothing reads it after that.
     */
-  def materialized(s: SparkSession, dir: String): Map[String, DataFrame] =
-    graft.sources.Warehouse.materializedLayer(s, dir, "stage")(build(s, dir))
+  def materialized(s: SparkSession, dir: String): Map[String, DataFrame] = {
+    val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    try graft.sources.Warehouse.materializedLayer(s, dir, "stage",
+        derivedTables)(tables(s, dir, checkpoints += _))
+    finally
+      checkpoints.foreach(org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint)
+  }
 }

@@ -20,27 +20,25 @@ import org.apache.spark.sql.types.LongType
   */
 object SurrogateKeys {
 
-  /** `trackScratch = true` (default) registers the internal checkpoint
-    * with [[Scratch]] for release at the next query boundary — right for
-    * per-invocation query paths (w2/w4). Callers whose RESULT is cached
-    * across queries (dim_provider's Memo entry: a cache-miss recompute
-    * re-reads the checkpoint) must pass false and accept the bounded
-    * one-frame-per-(session, dir) retention.
+  /** The sort's checkpoint goes to `checkpoint`, which owns its release
+    * once the numbered frame is no longer read. The default hands it to
+    * [[Scratch]], released at the next query boundary — right for
+    * per-invocation query paths (w2/w4); the stage layer releases
+    * dim_provider's right after writing it.
     */
   def withGlobalRowNumber(df: DataFrame, keyName: String,
-      order: Seq[Column], trackScratch: Boolean = true): DataFrame = {
+      order: Seq[Column],
+      checkpoint: DataFrame => Unit = Scratch.track(_)): DataFrame = {
     val spark = df.sparkSession
     // localCheckpoint materializes the sorted rows once (zipWithIndex's
-    // offset-count job would otherwise run the range sort twice); the
-    // Scratch registry (or, untracked, the ContextCleaner once the
-    // result becomes unreferenced) releases the blocks, so repeated
-    // calls don't accumulate executor storage for the life of the
-    // session. It also copies rows internally (the scan reuses one
-    // UnsafeRow per partition).
+    // offset-count job would otherwise run the range sort twice); its
+    // owner releases the blocks, so repeated calls don't accumulate
+    // executor storage for the life of the session. It also copies rows
+    // internally (the scan reuses one UnsafeRow per partition).
     val sorted = df.repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
       .localCheckpoint()
-    if (trackScratch) Scratch.track(sorted)
+    checkpoint(sorted)
     val schema = sorted.schema.add(keyName, LongType, nullable = false)
     // Stay on InternalRow — boxing 800k+ wide rows through the public Row
     // API costs more than the numbering itself. JoinedRow reuse follows

@@ -5,30 +5,26 @@ import graft.expressions.RollingHash
 import graft.ops.{Op, OpGroup}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface (SURVEY.md §2.1): layered materialization (S2-S5),
   * catalog listing (S8), plus the custom rolling-hash fingerprint query
   * backed by the native Catalyst expression [[graft.expressions.RollingHash]].
   *
   * The reference materializes every statement into MariaDB tables; here a
-  * layer is a `Map[String, DataFrame]` written as parquet in one pass —
+  * layer is a `Map[String, DataFrame]` written as parquet, fact first —
   * the fact partitioned by its low-cardinality source_type so downstream
   * per-source reads prune partitions (C3's index replacement).
   */
 object Warehouse extends OpGroup {
 
-  /** S3/S4/S5: materialize a layer (CTAS semantics, overwrite =
-    * idempotent DROP+CREATE).
-    *
-    * The fact is written FIRST and alone — every dim derives from the
-    * (cached) enriched fact, so its write is the one that fills the
-    * cache; racing the dims against it would materialize the fact build
-    * 2-7×. The small dim writes then run concurrently: each is a tiny
-    * job and Spark's scheduler interleaves them, so wall time ≈ the
-    * slowest dim, not the sum.
+  /** S3/S4/S5: write a layer's tables as parquet (CTAS semantics,
+    * overwrite = idempotent DROP+CREATE), all concurrently: each small
+    * table is a tiny job and Spark's scheduler interleaves them, so wall
+    * time ≈ the slowest table, not the sum. The fact is partitioned by
+    * its source_type.
     */
-  def writeLayer(layer: Map[String, DataFrame], basePath: String,
-      partitionFact: Boolean = true): Unit = {
+  def writeLayer(layer: Map[String, DataFrame], basePath: String): Unit = {
     // Output file sizing (guide §6): the build plans run at the session's
     // shuffle partitioning, so an unhinted write emits one file per
     // partition — ~32 KB-sized files PER TABLE at bench scale (the
@@ -40,8 +36,7 @@ object Warehouse extends OpGroup {
     // splits a skewed partition instead of writing it as one giant
     // file). The hint is a no-op without AQE.
     def write(name: String, df: DataFrame): Unit = {
-      val isFact = name == "fact" && partitionFact &&
-        df.columns.contains("source_type")
+      val isFact = name == "fact" && df.columns.contains("source_type")
       val sized =
         if (isFact) df.hint("rebalance", col("source_type"))
         else df.hint("rebalance")
@@ -49,17 +44,15 @@ object Warehouse extends OpGroup {
       val withPart = if (isFact) w.partitionBy("source_type") else w
       withPart.parquet(s"$basePath/$name")
     }
-    layer.get("fact").foreach(write("fact", _))
-    val dims = (layer - "fact").toSeq
-    if (dims.nonEmpty) {
+    if (layer.nonEmpty) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(dims.size, 8))
+        math.min(layer.size, 8))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
-      try Await.result(
-        Future.sequence(dims.map { case (n, df) => Future(write(n, df)) }),
+      try Await.result(Future.sequence(
+          layer.toSeq.map { case (n, df) => Future(write(n, df)) }),
         Duration.Inf)
       finally pool.shutdown()
     }
@@ -69,6 +62,21 @@ object Warehouse extends OpGroup {
   def readLayer(spark: SparkSession, basePath: String,
       names: Seq[String]): Map[String, DataFrame] =
     names.map(n => n -> spark.read.parquet(s"$basePath/$n")).toMap
+
+  /** Write `tables` under `basePath` and return their file-backed frames.
+    * Each reads with the schema it was written with — parquet's schema
+    * inference costs one Spark job per table — its fields nullable (as
+    * every parquet read returns them) and its columns in the pre-write
+    * order (partitionBy moves the partition column last).
+    */
+  private[graft] def land(s: SparkSession, basePath: String,
+      tables: Map[String, DataFrame]): Map[String, DataFrame] = {
+    writeLayer(tables, basePath)
+    tables.map { case (n, df) =>
+      n -> s.read.schema(StructType(df.schema.map(_.copy(nullable = true))))
+        .parquet(s"$basePath/$n").select(df.columns.map(col): _*)
+    }
+  }
 
   /** Per-JVM materialization ROOT: two concurrent JVMs (tests alongside a
     * verify run, two CI jobs on one box) must never overwrite each
@@ -103,19 +111,24 @@ object Warehouse extends OpGroup {
   private val matLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Materialize a layer ONCE per (session, dir, layer): write it with
-    * [[writeLayer]], read the files back, and memoize the file-backed
-    * map so every later consumer gets parquet scans instead of a plan
-    * re-derivation. `build` is by-name — a memo hit never constructs the
-    * layer. Columns are re-selected into the pre-write order (partitionBy
-    * moves the partition column last on read).
+  /** Materialize a layer ONCE per (session, dir, layer) and memoize the
+    * file-backed map, so every later consumer gets parquet scans instead
+    * of a plan re-derivation. `build` is by-name — a memo hit never
+    * constructs the layer.
+    *
+    * The layer files are the only materialization: the "fact" table is
+    * landed first, and `derived` builds the layer's remaining tables from
+    * the WRITTEN fact (a file scan), so no fact-sized frame is held in
+    * executor memory to share it between writes. Those derived tables and
+    * the ones `build` returns besides the fact are then landed together.
     *
     * First-build is serialized under a PER-KEY lock so two racing threads
     * can't run overlapping writes to the same path (nested layers — DWH
     * building on stage — take different locks, so reentrancy is safe;
     * a map-wide computeIfAbsent would not be, see [[graft.ops.Memo]]).
     */
-  def materializedLayer(s: SparkSession, dir: String, layer: String)(
+  def materializedLayer(s: SparkSession, dir: String, layer: String,
+      derived: DataFrame => Map[String, DataFrame] = _ => Map.empty)(
       build: => Map[String, DataFrame]): Map[String, DataFrame] = {
     val key = s"${System.identityHashCode(s)}|$dir|$layer"
     val existing = matStore.get(key)
@@ -126,13 +139,12 @@ object Warehouse extends OpGroup {
       if (won != null) return won
       val m = build
       val base = layerPath(dir, layer)
-      writeLayer(m, base)
-      val back = readLayer(s, base, m.keys.toSeq)
-      val ordered = m.map { case (n, df) =>
-        n -> back(n).select(df.columns.map(col): _*)
-      }
-      matStore.put(key, ordered)
-      ordered
+      val fact = land(s, base, m.filter(_._1 == "fact"))
+      val out = fact ++
+        land(s, base, (m - "fact") ++ fact.get("fact").fold(
+          Map.empty[String, DataFrame])(derived))
+      matStore.put(key, out)
+      out
     }
   }
 

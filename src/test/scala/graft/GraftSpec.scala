@@ -157,18 +157,8 @@ class GraftSpec extends AnyFunSuite {
       "sim_cosine_topk" -> 1, // rank AFTER limit(topK) — k rows
       "sim_rewritten_cosine_topk" -> 1, // rank AFTER limit(topK) — k rows
       "curate_diverse_sample" -> 1, // pick window on cell_rank<=budget stratum
-      "curate_pack_sequences" -> 1, // prefix sum over SUPER-SHARD totals
+      "curate_pack_sequences" -> 1) // prefix sum over SUPER-SHARD totals
                                     // (corpus/4096² rows — ~600 at 10¹⁰ docs)
-      // The r13 cache-descending auditor (WindowAudit via Explain.planNodes)
-      // surfaced the junk-dim surrogate window (Stage.dimJunkFrom) inside
-      // the factEnriched CACHED builder — previously invisible behind the
-      // InMemoryRelation boundary. Dim-bounded: the window input is
-      // DISTINCT(source_type, unit, careunit), an enum-product of a few
-      // dozen rows at any corpus size (the j6 junk-dim justification).
-      // pipe_stage_dim_date sees the same single node transitively
-      // (dimDate reads factEnriched).
-      "pipe_stage_fact" -> 1,
-      "pipe_stage_dim_date" -> 1)
     // Third scale-killer class: a KEYED window without a bounded
     // partition-SIZE argument. The criterion and the per-key size bounds
     // live in [[WindowAudit]] (with its own negative control below):
@@ -211,6 +201,36 @@ class GraftSpec extends AnyFunSuite {
         violations.mkString("\n  "))
   }
 
+  test("scale audit: stage and DWH build frames") {
+    // The pipe_stage_* ops read the written layer (file scans), so the
+    // query sweep above does not see the build plans; audit the layers'
+    // in-memory definitions directly, with the same three classes.
+    // The one global window is the junk-dim surrogate (Stage.dimJunkFrom)
+    // inside the enriched fact. Dim-bounded: the window input is
+    // DISTINCT(source_type, unit, careunit), an enum-product of a few
+    // dozen rows at any corpus size (the j6 junk-dim justification).
+    // In Stage.build, dim_junk and dim_date read the in-memory fact, so
+    // they see the same single node transitively.
+    val allowedGlobalWin = Map(
+      "stage.fact" -> 1, "stage.dim_junk" -> 1, "stage.dim_date" -> 1)
+    val frames =
+      Stage.build(spark, dir).map { case (n, df) => s"stage.$n" -> df } ++
+        Dwh.build(spark, dir).map { case (n, df) => s"dwh.$n" -> df }
+    assert(frames.size == 15, s"layer tables: ${frames.keys}")
+    val violations = frames.toSeq.sortBy(_._1).flatMap { case (name, df) =>
+      val loops = Explain.counters(df)("nestedLoopJoins")
+      val gwin = WindowAudit.globalWindowCount(df)
+      val allowed = allowedGlobalWin.getOrElse(name, 0)
+      (if (loops > 0) Seq(s"$name: $loops loop joins") else Nil) ++
+        (if (gwin > allowed)
+          Seq(s"$name: $gwin global windows (allowed $allowed)") else Nil) ++
+        WindowAudit.violations(df).map(v => s"$name: $v")
+    }
+    assert(violations.isEmpty,
+      "scale-audit violations in the layer builds:\n  " +
+        violations.mkString("\n  "))
+  }
+
   test("window audit rejects a stratum-keyed window (negative control)") {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.load(spark, dir, "documents")
@@ -236,7 +256,7 @@ class GraftSpec extends AnyFunSuite {
     // which is how dimProvider's single-task sort evaded the r12 sweep.
     // The physical-plan walk must descend into relation.cachedPlan and
     // still count it; consumers stacked ON TOP of the cache must also
-    // see it (pipe_stage_dim_date sees factEnriched's junk window).
+    // see it.
     val docs = Tables.load(spark, dir, "documents")
     val cached = docs.withColumn("rk",
       row_number().over(Window.orderBy(col("doc_id")))).cache()
@@ -363,16 +383,10 @@ class GraftSpec extends AnyFunSuite {
         "Memo-owned: erResolved (the linkage artifact, layer-warmed)")),
       "multimodal/Multimodal.scala" -> ((1,
         "Memo-owned: mediaHashBands")),
-      "etl/Dwh.scala" -> ((2,
-        "one-shot layer-build caches (guarded fact + its pre-agg " +
-          "input); consumers read the materialized parquet after the " +
-          "boundary, and repeat builds share one plan-canonicalized " +
-          "entry")),
-      "etl/Stage.scala" -> ((8,
-        "7 Memo-owned top frames (5 dims, dimJunk, dimDate, " +
-          "factEnriched's returned frame) + f4, an intermediate the " +
-          "final Memo-owned plan references (shared via plan " +
-          "canonicalization; boundary consumers read parquet)")),
+      "etl/Stage.scala" -> ((1,
+        "Memo-owned: dimConcepts (dim-sized; read by the fact's OMR " +
+          "concept join and by the dim_concepts write). The layer files " +
+          "are the only materialization of every fact-sized frame")),
       "sources/Warehouse.scala" -> ((1,
         "corrupt-feed parsed JSON: a bounded quarantine file, one " +
           "plan-canonicalized entry, required by Spark's " +
@@ -474,6 +488,59 @@ class GraftSpec extends AnyFunSuite {
     val aggSum = dwh("agg_disorders_per_admission")
       .agg(sum("total_events")).head.getLong(0)
     assert(factCnt == aggSum)
+  }
+
+  test("stage layer refresh leaves no block storage behind") {
+    // A refresh is a new session plus clearCache: everything the layer
+    // build held in the block manager (dim_provider's sort checkpoint
+    // included) must be gone after it, however many refreshes ran. The
+    // refreshes run over a copy of the data: a refresh rewrites the
+    // dir's layer files, which the suite session's layer still reads.
+    val copy = java.nio.file.Files.createTempDirectory("graft_refresh")
+    Tables.all.foreach { n =>
+      val src = java.nio.file.Paths.get(dir, s"$n.parquet")
+      scala.util.Using.resource(java.nio.file.Files.walk(src)) { walk =>
+        walk.iterator().forEachRemaining { p =>
+          java.nio.file.Files.copy(p, copy.resolve(s"$n.parquet")
+            .resolve(src.relativize(p).toString))
+        }
+      }
+    }
+    def rddsAfterRefresh(): Int = {
+      Stage.materialized(spark.newSession(), copy.toString)
+      spark.catalog.clearCache()
+      // releases are asynchronous: wait until the count stops moving
+      var (last, n, stable) = (-1, 0, 0)
+      while (stable < 3 && n < 50) {
+        val now = spark.sparkContext.getRDDStorageInfo.length
+        stable = if (now == last) stable + 1 else 0
+        last = now; n += 1
+        Thread.sleep(100)
+      }
+      last
+    }
+    val first = rddsAfterRefresh()
+    val second = rddsAfterRefresh()
+    assert(second <= first,
+      s"cached/checkpointed RDDs grew from $first to $second per refresh")
+  }
+
+  test("qa fact_vs_agg reconciles against the written pre-aggregation") {
+    // QA.sql:67-71 checks the agg TABLE: a bad aggregate write must show,
+    // not a re-aggregation of the fact that agrees by construction.
+    val stage = Stage.materialized(spark, dir)
+    val dwh = Dwh.materialized(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_qa").toString
+    val agg = "agg_disorders_per_admission"
+    sources.Warehouse.writeLayer(Map(agg -> dwh(agg)
+      .withColumn("total_events", col("total_events") + 1)), tmp)
+    val tampered = dwh ++ sources.Warehouse.readLayer(spark, tmp, Seq(agg))
+    def diff(d: Map[String, org.apache.spark.sql.DataFrame]): Long =
+      Qa.reportOf(stage, d).filter(col("check_name") === "fact_vs_agg")
+        .head.getAs[Long]("diff")
+    assert(diff(dwh) == 0)
+    assert(diff(tampered) == -dwh(agg).count(),
+      "fact_vs_agg must see every tampered aggregate row")
   }
 
   test("qa report: all expected-zero checks are zero") {
